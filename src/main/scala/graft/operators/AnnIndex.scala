@@ -139,10 +139,10 @@ object AnnIndex {
     */
   def append(corpus: DataFrame, vecCol: String, idCol: String,
              name: String): Unit = {
-    val spark = corpus.sparkSession
-    val (planes, tables) = geometry(spark, name)
+    val props = properties(corpus.sparkSession, name)
+    val (planes, tables) = geometryOf(props)
     val postings = postingsOf(corpus, vecCol, idCol, planes, tables,
-      quantized(spark, name))
+      quantizedOf(props))
     graft.sources.Bucketize.appendBucketed(postings, postingsTable(name),
       Seq("tbl", "bkt"))
   }
@@ -171,22 +171,32 @@ object AnnIndex {
       s"$newPath/centroids")
   }
 
+  /** The postings table's properties, read with ONE `SHOW TBLPROPERTIES`:
+    * `append` takes geometry and quantization from the same read.
+    */
+  private def properties(spark: org.apache.spark.sql.SparkSession,
+                         name: String): Map[String, String] =
+    spark.sql(s"SHOW TBLPROPERTIES `${postingsTable(name)}`")
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+
+  private def geometryOf(props: Map[String, String]): (Int, Int) =
+    (props("graft.planesPerTable").toInt, props("graft.nTables").toInt)
+
+  private def quantizedOf(props: Map[String, String]): Boolean =
+    props.get("graft.quantized")
+      .exists(graft.ops.Config.parseBoolean("graft.quantized", _))
+
   /** The (planesPerTable, nTables) geometry persisted with the index. */
   def geometry(spark: org.apache.spark.sql.SparkSession,
-               name: String): (Int, Int) = {
-    val props = spark.sql(s"SHOW TBLPROPERTIES `${postingsTable(name)}`")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    (props("graft.planesPerTable").toInt, props("graft.nTables").toInt)
-  }
+               name: String): (Int, Int) =
+    geometryOf(properties(spark, name))
 
   /** Whether the postings were written SQ8-quantized (absent = false,
     * for indexes laid out before the flag existed).
     */
   def quantized(spark: org.apache.spark.sql.SparkSession,
                 name: String): Boolean =
-    spark.sql(s"SHOW TBLPROPERTIES `${postingsTable(name)}`")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      .get("graft.quantized").exists(_.toBoolean)
+    quantizedOf(properties(spark, name))
 
   /** Top-k per query against the persisted postings; the bucket geometry
     * comes from the index's own table properties. Output schema and rank

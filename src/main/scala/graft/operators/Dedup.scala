@@ -620,50 +620,53 @@ object Dedup {
     * dedup drops (soft pipelines can reweight on cluster_size instead,
     * mirroring `duplicationWeights`).
     *
-    * Scale shape: the label-propagation loop and its joins are bounded by
-    * the PAIR GRAPH (edge-touched ids only), not the corpus; per-cluster
-    * stats come from ONE map-side-combined aggregate over the clustered
-    * rows (count + min_by are partial-aggregable, so a mega-cluster — a
-    * boilerplate page duplicated millions of times, exactly the shape
-    * dedup targets — pre-collapses per partition instead of landing on
-    * one window task) joined back on the label (cluster-count-sized side,
-    * AQE-broadcastable); untouched docs take the `kept = true` fast path
-    * through one AQE-broadcastable anti-join. Nothing corpus-sized is
-    * ever sorted or collected.
+    * Clustering route, chosen by pair count (as `deduplicate` does):
+    *  - up to [[MaxDriverPairs]] pairs (the common case: near-dup graphs
+    *    are tiny next to the corpus), ONE bounded collect of the pairs and
+    *    a union-find on the driver. The (id, label) frame goes back as a
+    *    local relation: the planner broadcasts it into both joins below
+    *    while it is under `spark.sql.autoBroadcastJoinThreshold` (about
+    *    400k long ids at the 10 MB default) and shuffle-joins it above.
+    *    The labels stay on the driver, in the verdict's plan, for as long
+    *    as the verdict lives, and ship with every action on it.
+    *  - above it, the distributed min-label loop (`connectedComponents`),
+    *    bounded by the pair graph, not the corpus. Its final labels are
+    *    checkpoint-backed; those blocks are freed by the ContextCleaner
+    *    once the returned frame is collected.
+    *  The pairs are persisted (unless the caller already did) for the span
+    *  of the collect and, above the guard, of the loop, so the pair
+    *  pipeline runs once on either route; the persist is released before
+    *  returning, and the driver route leaves no persisted or checkpointed
+    *  block behind. Ids whose JVM values do not compare the way Spark's
+    *  join keys do (binary, floating-point, non-binary collated strings,
+    *  and structs or arrays holding them) always take the distributed loop.
+    *
+    * Per-cluster stats come from ONE map-side-combined aggregate over the
+    * clustered rows (count + min_by are partial-aggregable, so a
+    * mega-cluster — a boilerplate page duplicated millions of times,
+    * exactly the shape dedup targets — pre-collapses per partition instead
+    * of landing on one window task) joined back on the label
+    * (cluster-count-sized side, AQE-broadcastable); untouched docs take
+    * the `kept = true` fast path through one AQE-broadcastable anti-join.
+    * Nothing corpus-sized is ever sorted or collected.
+    *
+    * LAZY contract (unlike `deduplicate`, whose output is vocabulary-sized
+    * and therefore eagerly materialized): the verdict is corpus-row-sized,
+    * so the CALLER owns its materialization — each action re-scans `df`
+    * for (id, score), but never the pair pipeline.
     */
   def keepBest(df: DataFrame, pairs: DataFrame, idCol: String,
-               scoreCol: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // The pair list is consumed twice (touched ids + the CC loop's edge
-    // frame) and the candidate pipeline behind it is the expensive part
-    // (shingles + signatures + band join + verify): persist it for the
-    // span of the clustering, then release it BEFORE returning — the
-    // returned verdict must not re-trigger the pair pipeline. That works
-    // because everything the verdict references is checkpoint-backed and
-    // PAIR-GRAPH-BOUNDED: `touched` is localCheckpointed here (eager) and
-    // the CC loop checkpoints its final labels internally, so after this
-    // call the only live state is graph-sized, NEVER corpus-sized (an
-    // earlier draft localCheckpointed the corpus-row verdict itself —
-    // exactly the kind of corpus-sized block-manager residency a 100 TB
-    // run cannot afford). The checkpoint blocks are freed by the
-    // ContextCleaner once the returned frame is garbage-collected.
-    //
-    // LAZY contract (unlike `deduplicate`, whose output is vocabulary-
-    // sized and therefore eagerly materialized): the verdict is
-    // corpus-row-sized, so the CALLER owns its materialization — each
-    // action re-scans `df` for (id, score), but never the pair pipeline.
-    // respect a caller-owned persist: unpersisting a frame the caller
-    // cached for reuse would silently evict THEIR blocks
-    val callerPersisted =
-      pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val p = if (callerPersisted) pairs
-      else pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    val touched = p
-      .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-      .localCheckpoint() // eager: pins the pair-bounded vertex set
-    val labels = connectedComponents(touched, p)
-    // CC ran eagerly; labels are checkpointed
-    if (!callerPersisted) p.unpersist(blocking = false)
+               scoreCol: String): DataFrame =
+    keepBestGuarded(df, pairs, idCol, scoreCol, MaxDriverPairs)
+
+  /** `keepBest` with the driver-route guard as a parameter, so a spec can
+    * force the distributed loop (`maxDriverPairs = 0`) on a small graph.
+    */
+  private[graft] def keepBestGuarded(df: DataFrame, pairs: DataFrame,
+      idCol: String, scoreCol: String, maxDriverPairs: Int): DataFrame = {
+    val labels = withPersistedPairs(pairs) { p =>
+      driverLabels(p, maxDriverPairs).getOrElse(distributedLabels(p))
+    }
     // null scores fail FAST on every CLUSTERED doc (where they would
     // silently win the per-cluster min_by below — ADVICE r12:
     // struct(negate(null), id) sorts first, so a null-scored doc would
@@ -688,6 +691,114 @@ object Dedup {
     clustered.unionByName(singletons)
       .select(col("id").as(idCol), col("__score").as(scoreCol),
         col("cluster_size"), col("kept"))
+  }
+
+  /** keepBest's driver route: (id, label) over the edge-touched ids as a
+    * local relation, or None when the graph is over `maxDriverPairs` or
+    * the id type cannot key a JVM HashMap (see `jvmKeyable`).
+    */
+  private def driverLabels(pairs: DataFrame,
+                           maxDriverPairs: Int): Option[DataFrame] = {
+    val idType = pairs.schema("id_a").dataType
+    val keyable = idType == pairs.schema("id_b").dataType && jvmKeyable(idType)
+    if (!keyable) None
+    else driverComponents(pairs, maxDriverPairs).map { roots =>
+      val rows = new java.util.ArrayList[org.apache.spark.sql.Row](roots.size)
+      roots.forEach((id, root) => rows.add(org.apache.spark.sql.Row(id, root)))
+      pairs.sparkSession.createDataFrame(rows, StructType(Seq(
+        StructField("id", idType, nullable = false),
+        StructField("label", idType, nullable = false))))
+    }
+  }
+
+  /** Whether collected values of type `t` are equal on the JVM exactly
+    * when Spark's join keys are: binary ids hash by array identity, boxed
+    * floats tell -0.0 from 0.0 where join keys normalize them, and
+    * String.equals cannot see a non-binary collation ('A' joins 'a' under
+    * UTF8_LCASE).
+    */
+  private def jvmKeyable(t: DataType): Boolean = t match {
+    case BinaryType | FloatType | DoubleType | _: MapType => false
+    case s: StringType => s.collationId == StringType.collationId
+    case s: StructType => s.fields.forall(f => jvmKeyable(f.dataType))
+    case a: ArrayType => jvmKeyable(a.elementType)
+    case _ => true
+  }
+
+  /** keepBest's distributed route: min-label propagation over the pair
+    * graph, for graphs above the driver guard. `pairs` must be persisted
+    * (`withPersistedPairs`): it is read twice, for the touched ids and for
+    * the CC loop's edge frame. Everything the labels reference is
+    * checkpoint-backed and PAIR-GRAPH-BOUNDED — `touched` is
+    * localCheckpointed here (eager) and the CC loop checkpoints its final
+    * labels — so the persist can be released once this returns, and the
+    * only live state is graph-sized, NEVER corpus-sized.
+    */
+  private def distributedLabels(pairs: DataFrame): DataFrame = {
+    val touched = pairs
+      .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
+      .localCheckpoint() // eager: pins the pair-bounded vertex set
+    connectedComponents(touched, pairs) // eager; labels are checkpointed
+  }
+
+  /** Runs `f` over `pairs` persisted for its span, then releases the
+    * persist. The bounded collect of `driverComponents` and, above its
+    * guard, the distributed loop both read the pairs, and the candidate
+    * pipeline behind them (shingles + signatures + band join + verify) is
+    * the expensive part: it must run once, not once per reader. `f` must
+    * return nothing that still reads `pairs` lazily. A persist the caller
+    * already owns is kept: unpersisting a frame the caller cached for
+    * reuse would silently evict THEIR blocks.
+    */
+  private def withPersistedPairs[T](pairs: DataFrame)(f: DataFrame => T): T = {
+    import org.apache.spark.storage.StorageLevel
+    val callerPersisted = pairs.storageLevel != StorageLevel.NONE
+    val p = if (callerPersisted) pairs
+      else pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    try f(p) finally if (!callerPersisted) p.unpersist(blocking = false)
+  }
+
+  /** The bounded driver route to connected components, shared by
+    * `deduplicate` and `keepBest`: collect at most `maxDriverPairs + 1`
+    * (id_a, id_b) rows — never an unbounded collect — and run union-find
+    * on them in O(E α(E)). Returns every non-null id of the pairs mapped
+    * to its component's root, or None when the graph has more than
+    * `maxDriverPairs` pairs. A pair with a null id adds no edge (an
+    * equi-join never matches null); its other id is still a vertex, alone
+    * unless another pair joins it — the components the distributed loop
+    * finds. Roots are arbitrary members: callers use them only as cluster
+    * keys.
+    */
+  private def driverComponents(pairs: DataFrame, maxDriverPairs: Int)
+      : Option[java.util.HashMap[Any, Any]] = {
+    val head = pairs.select(col("id_a"), col("id_b"))
+      .limit(math.min(maxDriverPairs, Int.MaxValue - 1) + 1).collect()
+    if (head.length > maxDriverPairs) None
+    else {
+      // union-find with path halving
+      val parent = new java.util.HashMap[Any, Any]()
+      def find(x: Any): Any = {
+        var r = x
+        var p = parent.get(r)
+        while (!p.equals(r)) {
+          val gp = parent.get(p)
+          parent.put(r, gp); r = p; p = gp
+        }
+        r
+      }
+      head.foreach { row =>
+        val (a, b) = (row.get(0), row.get(1))
+        if (a != null) parent.putIfAbsent(a, a)
+        if (b != null) parent.putIfAbsent(b, b)
+        if (a != null && b != null) {
+          val (ra, rb) = (find(a), find(b))
+          if (!ra.equals(rb)) parent.put(rb, ra)
+        }
+      }
+      // flatten: every id maps straight to its root
+      parent.keySet.toArray.foreach(id => parent.put(id, find(id)))
+      Some(parent)
+    }
   }
 
   /** Connected components over an undirected pair list via iterative
@@ -825,14 +936,16 @@ object Dedup {
   def autoRoutesToMinhash(nVals: Long, totalChars: Long): Boolean =
     nVals > AutoMinhashAbove || totalChars > AutoMinhashCharsAbove
 
-  /** `maxDriverPairs` default sizing: the driver path collects up to
-    * (limit+1) two-md5-string rows (~200 B each on-heap) and touches up to
-    * 2x that many id strings — 1M pairs keeps the worst case near ~0.5 GB
-    * driver heap; larger graphs take the distributed min-label CC fallback,
-    * which scales to any size.
+  /** Guard of the driver union-find route that `deduplicate` and
+    * `keepBest` share: the route collects up to (limit+1) pair rows (two
+    * md5 strings are ~200 B on-heap) and touches up to 2x that many ids —
+    * 1M pairs keeps the worst case near ~0.5 GB driver heap; larger graphs
+    * take the distributed min-label CC fallback, which scales to any size.
     */
+  val MaxDriverPairs = 1000000
+
   def deduplicate(df: DataFrame, c: String, minJaccard: Double = 0.4,
-                  n: Int = 3, maxDriverPairs: Int = 1000000,
+                  n: Int = 3, maxDriverPairs: Int = MaxDriverPairs,
                   candidates: String = "auto"): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     require(Set("auto", "jaccard", "minhash").contains(candidates),
@@ -874,97 +987,78 @@ object Dedup {
     // `maxDriverPairs` via limit — never an unbounded collect), run
     // union-find on the driver in O(E α(E)), and broadcast the resulting
     // translation map back. Above the guard, fall back to the distributed
-    // min-label-propagation loop, which scales to any graph.
-    val head = pairs.select(col("id_a"), col("id_b"))
-      .limit(math.min(maxDriverPairs, Int.MaxValue - 1) + 1).collect()
-    if (head.length <= maxDriverPairs) {
-      // union-find with path halving; union by smaller-root keeps roots
-      // deterministic but the canonical choice below never depends on them
-      val parent = new java.util.HashMap[String, String]()
-      def find(x: String): String = {
-        var r = x
-        var p = parent.getOrDefault(r, r)
-        while (p != r) {
-          val gp = parent.getOrDefault(p, p)
-          parent.put(r, gp); r = p; p = gp
+    // min-label-propagation loop, which scales to any graph. Both routes
+    // read the pairs persisted, so the pair pipeline runs once.
+    withPersistedPairs(pairs) { p => driverComponents(p, maxDriverPairs) match {
+      case Some(roots) =>
+        // only edge-touched values can have a non-identity canonical; fetch
+        // their (id, v, freq) with a broadcast semi-join against the persisted
+        // distinct-value frame (bounded by 2·|pairs| rows)
+        import scala.jdk.CollectionConverters._
+        import spark.implicits._
+        val touched = roots.keySet.asScala.toSeq.map(_.asInstanceOf[String])
+        val members = vals.join(broadcast(touched.toDF("id")), Seq("id"))
+          .select(col("id"), col("v"), col("freq")).collect()
+        // canonical per cluster: most frequent member, ties -> smallest value
+        // by UNSIGNED UTF-8 byte order (Spark's UTF8String/binary collation —
+        // Java String.compareTo differs above the BMP, so compare bytes)
+        def utf8Less(a: String, b: String): Boolean = {
+          val (x, y) = (a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+          var i = 0
+          val m = math.min(x.length, y.length)
+          while (i < m) {
+            val c = (x(i) & 0xff) - (y(i) & 0xff)
+            if (c != 0) return c < 0
+            i += 1
+          }
+          x.length < y.length
         }
-        r
-      }
-      head.foreach { row =>
-        val (ra, rb) = (find(row.getString(0)), find(row.getString(1)))
-        if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
-      }
-      // only edge-touched values can have a non-identity canonical; fetch
-      // their (id, v, freq) with a broadcast semi-join against the persisted
-      // distinct-value frame (bounded by 2·|pairs| rows)
-      val touched = {
-        val s = new scala.collection.mutable.HashSet[String]()
-        head.foreach { r => s += r.getString(0); s += r.getString(1) }
-        s
-      }
-      import spark.implicits._
-      val members = vals.join(broadcast(touched.toSeq.toDF("id")), Seq("id"))
-        .select(col("id"), col("v"), col("freq")).collect()
-      // canonical per cluster: most frequent member, ties -> smallest value
-      // by UNSIGNED UTF-8 byte order (Spark's UTF8String/binary collation —
-      // Java String.compareTo differs above the BMP, so compare bytes)
-      def utf8Less(a: String, b: String): Boolean = {
-        val (x, y) = (a.getBytes("UTF-8"), b.getBytes("UTF-8"))
-        var i = 0
-        val m = math.min(x.length, y.length)
-        while (i < m) {
-          val c = (x(i) & 0xff) - (y(i) & 0xff)
-          if (c != 0) return c < 0
-          i += 1
+        val canonicalOf = new java.util.HashMap[Any, (String, Long)]()
+        members.foreach { m =>
+          val root = roots.get(m.getString(0))
+          val (v, f) = (m.getString(1), m.getLong(2))
+          val cur = canonicalOf.get(root)
+          if (cur == null || f > cur._2 || (f == cur._2 && utf8Less(v, cur._1)))
+            canonicalOf.put(root, (v, f))
         }
-        x.length < y.length
-      }
-      val canonicalOf = new java.util.HashMap[String, (String, Long)]()
-      members.foreach { m =>
-        val root = find(m.getString(0))
-        val (v, f) = (m.getString(1), m.getLong(2))
-        val cur = canonicalOf.get(root)
-        if (cur == null || f > cur._2 || (f == cur._2 && utf8Less(v, cur._1)))
-          canonicalOf.put(root, (v, f))
-      }
-      val trans = members.map(m =>
-        (m.getString(0), canonicalOf.get(find(m.getString(0)))._1)).toSeq
-      val out = vals.join(broadcast(trans.toDF("id", "canonical")), Seq("id"), "left")
-        .select(col("v").as("value"),
-          coalesce(col("canonical"), col("v")).as("canonical"))
-      // Materialize the translation map (|distinct values| rows) eagerly so
-      // the vals persist this call owns can be freed before returning — the
-      // returned frame is backed by a lineage-truncated checkpoint block,
-      // released with the result like any consumer-owned frame (or by the
-      // ContextCleaner once unreferenced).
-      val mat = out.localCheckpoint()
-      vals.unpersist(blocking = false)
-      mat
-    } else {
-      val (labels, labelBlocks) =
-        connectedComponentsTracked(vals.select(col("id")), pairs)
-      val labeled = vals.join(labels, Seq("id"))
-      // cluster representative (most frequent member, ties -> smallest value)
-      // via ONE window aggregate over the label partition — a groupBy+rejoin
-      // would shuffle the same data twice on the same key
-      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("label"))
-      val out = labeled
-        .withColumn("canonical",
-          min_by(col("v"), struct(negate(col("freq")), col("v"))).over(w))
-        .select(col("v").as("value"), col("canonical"))
-      // The translation map is the contract output (|distinct values| rows —
-      // already far smaller than the input); materialize it once and free
-      // every intermediate this call OWNS (the vals persist + the CC loop's
-      // final label checkpoint, whose ids the tracked variant returns) — a
-      // long-lived session running many deduplicate() calls accumulates no
-      // dead storage, and blocks registered by concurrent driver threads are
-      // never touched.
-      val mat = out.localCheckpoint()
-      labelBlocks.foreach(i =>
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
-      vals.unpersist(blocking = false)
-      mat
-    }
+        val trans = members.map(m =>
+          (m.getString(0), canonicalOf.get(roots.get(m.getString(0)))._1)).toSeq
+        val out = vals.join(broadcast(trans.toDF("id", "canonical")), Seq("id"), "left")
+          .select(col("v").as("value"),
+            coalesce(col("canonical"), col("v")).as("canonical"))
+        // Materialize the translation map (|distinct values| rows) eagerly so
+        // the vals persist this call owns can be freed before returning — the
+        // returned frame is backed by a lineage-truncated checkpoint block,
+        // released with the result like any consumer-owned frame (or by the
+        // ContextCleaner once unreferenced).
+        val mat = out.localCheckpoint()
+        vals.unpersist(blocking = false)
+        mat
+      case None =>
+        val (labels, labelBlocks) =
+          connectedComponentsTracked(vals.select(col("id")), p)
+        val labeled = vals.join(labels, Seq("id"))
+        // cluster representative (most frequent member, ties -> smallest value)
+        // via ONE window aggregate over the label partition — a groupBy+rejoin
+        // would shuffle the same data twice on the same key
+        val w = org.apache.spark.sql.expressions.Window.partitionBy(col("label"))
+        val out = labeled
+          .withColumn("canonical",
+            min_by(col("v"), struct(negate(col("freq")), col("v"))).over(w))
+          .select(col("v").as("value"), col("canonical"))
+        // The translation map is the contract output (|distinct values| rows —
+        // already far smaller than the input); materialize it once and free
+        // every intermediate this call OWNS (the vals persist + the CC loop's
+        // final label checkpoint, whose ids the tracked variant returns) — a
+        // long-lived session running many deduplicate() calls accumulates no
+        // dead storage, and blocks registered by concurrent driver threads are
+        // never touched.
+        val mat = out.localCheckpoint()
+        labelBlocks.foreach(i =>
+          sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
+        vals.unpersist(blocking = false)
+        mat
+    }}
   }
 
   /** L2-normalize a float array column (double arithmetic). */

@@ -44,4 +44,12 @@ object Config {
     local.set(Some(s))
     try body finally local.set(prev)
   }
+
+  /** Parse a boolean setting (a session conf or a table property): `true`
+    * or `false`, any case. A bad value fails naming the key, not with a
+    * bare `For input string`.
+    */
+  def parseBoolean(key: String, value: String): Boolean =
+    value.toBooleanOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be true or false, got '$value'"))
 }

@@ -91,7 +91,8 @@ object Bucketize {
   private def clusterByBucket(df: DataFrame, keys: Seq[String],
                               numBuckets: Int): DataFrame = {
     import org.apache.spark.sql.functions.col
-    if (!df.sparkSession.conf.getOption(ClusteredWriteKey).forall(_.toBoolean))
+    if (!df.sparkSession.conf.getOption(ClusteredWriteKey)
+          .forall(graft.ops.Config.parseBoolean(ClusteredWriteKey, _)))
       return df
     val perBucket =
       df.queryExecution.optimizedPlan.stats.sizeInBytes / numBuckets

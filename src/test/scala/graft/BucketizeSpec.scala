@@ -182,6 +182,19 @@ class BucketizeSpec extends AnyFunSuite {
     }
   }
 
+  test("a bad graft.bucketize.clusteredWrite value fails naming the key") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bktbad").toString
+    val df = (1L to 10L).map(i => (i, s"v$i")).toDF("k", "v")
+    val e = intercept[IllegalArgumentException] {
+      withConf(Bucketize.ClusteredWriteKey -> "yes") {
+        Bucketize.writeBucketed(df, "graft_bkt_bad", s"$dir/t", Seq("k"), 2)
+      }
+    }
+    assert(e.getMessage.contains(Bucketize.ClusteredWriteKey), e.getMessage)
+    assert(e.getMessage.contains("true or false"), e.getMessage)
+    assert(!spark.catalog.tableExists("graft_bkt_bad"))
+  }
+
   test("compact leaves no autoBucketedScan pin behind when the conf was " +
     "never explicitly set (r17: getOption returns the registered default, " +
     "so the restore must unset, not re-set)") {

@@ -126,6 +126,83 @@ class DedupSpec extends AnyFunSuite {
     assert(fast === dist)
   }
 
+  /** keepBest verdicts as sorted (id, score, cluster_size, kept) tuples. */
+  private def verdicts(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), Option(r.get(1)), r.getLong(2),
+      r.getBoolean(3))).sortBy(_._1).toSeq
+
+  test("keepBest: driver union-find route and distributed CC fallback agree") {
+    val docs = TestSpark.table("documents")
+    // score with ties, so both routes must break them toward the smallest id
+    val scored = docs.select(col("doc_id"),
+      (length(col("text")) % 5).cast("long").as("score"))
+    val pairs = Dedup.minhashLshPairs(docs, "text", "doc_id", minJaccard = 0.2)
+      .select(col("id_a"), col("id_b"))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val fast = verdicts(Dedup.keepBest(scored, pairs, "doc_id", "score"))
+    // the driver route persists and checkpoints nothing
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"keepBest driver route left blocks: $leaked")
+    // a guard of 0 puts every non-empty graph over it -> the distributed
+    // min-label-propagation loop runs instead
+    val dist = verdicts(
+      Dedup.keepBestGuarded(scored, pairs, "doc_id", "score", 0))
+    assert(fast.count(_._3 > 1) > 0, "fixture must produce clusters")
+    assert(fast.length === docs.count())
+    assert(fast === dist)
+  }
+
+  test("keepBest: empty pair list and null-id pairs on both routes") {
+    val df = Seq((1L, 5L), (2L, 9L), (3L, 4L), (4L, 1L)).toDF("id", "score")
+    val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
+    val allKept = Seq((1L, Some(5L), 1L, true), (2L, Some(9L), 1L, true),
+      (3L, Some(4L), 1L, true), (4L, Some(1L), 1L, true))
+    assert(verdicts(Dedup.keepBest(df, none, "id", "score")) === allKept)
+    // an empty graph fits a guard of 0; -1 forces the distributed loop
+    assert(verdicts(Dedup.keepBestGuarded(df, none, "id", "score", -1)) ===
+      allKept)
+    // a null id never joins: the pair adds no edge, its other id stays alone
+    val withNull = Seq((Some(1L), Some(2L)), (Some(3L), None: Option[Long]),
+      (None: Option[Long], None: Option[Long])).toDF("id_a", "id_b")
+    val fast = verdicts(Dedup.keepBest(df, withNull, "id", "score"))
+    assert(fast === Seq((1L, Some(5L), 2L, false), (2L, Some(9L), 2L, true),
+      (3L, Some(4L), 1L, true), (4L, Some(1L), 1L, true)))
+    assert(verdicts(Dedup.keepBestGuarded(df, withNull, "id", "score", 0)) ===
+      fast)
+  }
+
+  test("keepBest over the guard runs the pair pipeline once") {
+    // the bounded collect and the distributed loop both read the pairs;
+    // the tap counts how many times the pipeline behind them produced a row
+    val calls = spark.sparkContext.longAccumulator("keepBestPairRows")
+    val tap = udf((x: Long) => { calls.add(1); x }).asNondeterministic()
+    val df = (1L to 6L).map(i => (i, i)).toDF("id", "score")
+    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("id_a", "id_b")
+      .repartition(2).select(tap(col("id_a")).as("id_a"), col("id_b"))
+    val v = verdicts(Dedup.keepBestGuarded(df, pairs, "id", "score", 0))
+    assert(calls.value === 3L)
+    assert(v.map(r => (r._3, r._4)) === Seq((3L, false), (3L, false),
+      (3L, true), (2L, false), (2L, true), (1L, true)))
+  }
+
+  test("keepBest: collated string ids cluster as the join keys compare") {
+    // under UTF8_LCASE 'A' and 'a' are one join key; on the JVM they are
+    // two HashMap keys, so the driver route would split {A, x} from {a, y}
+    // and join doc 'a' to both labels
+    val lcase = org.apache.spark.sql.types.StringType("UTF8_LCASE")
+    val df = Seq(("a", 1L), ("x", 2L), ("y", 3L), ("z", 4L)).toDF("id", "score")
+      .select(col("id").cast(lcase).as("id"), col("score"))
+    val pairs = Seq(("A", "x"), ("a", "y")).toDF("id_a", "id_b")
+      .select(col("id_a").cast(lcase).as("id_a"), col("id_b").cast(lcase).as("id_b"))
+    def rows(v: org.apache.spark.sql.DataFrame) = v.collect()
+      .map(r => (r.getString(0), r.getLong(2), r.getBoolean(3))).sorted.toSeq
+    val expected = Seq(("a", 3L, false), ("x", 3L, false), ("y", 3L, true),
+      ("z", 1L, true))
+    assert(rows(Dedup.keepBest(df, pairs, "id", "score")) === expected)
+    assert(rows(Dedup.keepBestGuarded(df, pairs, "id", "score", 0)) === expected)
+  }
+
   test("auto routing gates on char volume OR distinct count") {
     // the bench corpus shape: ~5k document-length values (~1.5M chars)
     // must route to minhash even though the count is far below the

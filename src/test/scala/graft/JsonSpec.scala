@@ -39,13 +39,17 @@ class JsonSpec extends AnyFunSuite {
     3 -> Gen.choose(-1e12, 1e12).suchThat(d => !d.isNaN && !d.isInfinite),
     1 -> Gen.oneOf(true, false))
 
+  // draw the element count first: `listOf(g).map(_.take(5))` would build
+  // a default-sized list (up to 100 subtrees) per level and drop the rest
+  private def upTo5[A](g: Gen[A]): Gen[List[A]] =
+    Gen.choose(0, 5).flatMap(Gen.listOfN(_, g))
+
   private def tree(depth: Int): Gen[Any] =
     if (depth <= 0) scalar
     else Gen.frequency(
       3 -> scalar,
-      2 -> Gen.listOf(tree(depth - 1)).map(_.take(5).toList),
-      2 -> Gen.listOf(Gen.zip(jsonString, tree(depth - 1)))
-        .map(_.take(5).toMap))
+      2 -> upTo5(tree(depth - 1)),
+      2 -> upTo5(Gen.zip(jsonString, tree(depth - 1))).map(_.toMap))
 
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(i.toLong)))
